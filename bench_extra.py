@@ -205,7 +205,8 @@ def sketchfold(cores: int) -> dict:
       jvm_hash_noop    — scan + cast(string) + xxhash64, no Python (JVM floor)
       cross_only_*     — mapInArrow that only counts rows: the pure
                          JVM->Python crossing floor, at the input's native
-                         partitioning and split 4 ways
+                         partitioning and coalesced to <= 4 tasks
+                         (``cross_only_p4_parts`` is the count it ran with)
       hll_pandas       — the shipped HyperLogLog.count_distinct (pandas fold)
       hll_arrow_proto  — the identical fold via mapInArrow, zero-copy
                          column -> numpy (what the library change would ship)
@@ -215,8 +216,12 @@ def sketchfold(cores: int) -> dict:
     Round-6 result (6M rows, 32 cores, healthy window): pandas ~= arrow on
     both sketches (hll 0.876 vs 0.901, kll 1.177 vs 1.219), crossing floor
     0.44-1.14 s (4+ tasks vs 1), JVM floor 0.12 s — the fold cost IS the
-    per-row crossing, which the transport choice does not touch, so the
-    library keeps the pandas fold."""
+    crossing floor, which the transport choice does not touch, so the
+    library keeps the pandas fold. Most of that floor was later traced to
+    task start-up, not to moving rows: each task's
+    ``importlib.invalidate_caches()`` re-parsed the pyspark.zip and
+    spark-core jar directories (stat-gated by ``import recsplit_spark``).
+    Exits non-zero when a prototype's estimate or state differs."""
     import numpy as np
     import pyarrow as pa
     import pyspark.sql.functions as F
@@ -251,6 +256,8 @@ def sketchfold(cores: int) -> dict:
     timed("jvm_hash_noop", lambda: _noop(src))
 
     def _cross_only(batches):
+        import recsplit_spark  # noqa: F401 — the task start-up every library UDF pays
+
         c = 0
         for b in batches:
             c += b.num_rows
@@ -260,19 +267,24 @@ def sketchfold(cores: int) -> dict:
         "cross_only_native",
         lambda: src.mapInArrow(_cross_only, "c long").agg(F.sum("c")).collect(),
     )
+    src_p4 = src.coalesce(4)
+    # coalesce never adds partitions: on an input already at <= 4 this row
+    # is NOT a 4-task crossing, so record the count it actually ran with
+    out["cross_only_p4_parts"] = src_p4.rdd.getNumPartitions()
     timed(
         "cross_only_p4",
-        lambda: src.coalesce(4)
-        .mapInArrow(_cross_only, "c long")
-        .agg(F.sum("c"))
-        .collect(),
+        lambda: src_p4.mapInArrow(_cross_only, "c long").agg(F.sum("c")).collect(),
     )
 
     def arrow_build(sk, src_df):
         def _fold(batches):
             st = None
             for b in batches:
-                arr = b.column(0).to_numpy(zero_copy_only=False)
+                col = b.column(0)
+                if sk.input_kind == "hash":
+                    # a null would reach to_numpy as NaN and cast to junk
+                    col = col.drop_null()
+                arr = col.to_numpy(zero_copy_only=False)
                 if st is None:
                     st = sk.new_state()
                 sk.update(st, arr)
@@ -303,6 +315,13 @@ def sketchfold(cores: int) -> dict:
     spark.sparkContext.setJobDescription(None)
     print(json.dumps(out))
     spark.stop()
+    unequal = [
+        k
+        for k in ("hll_estimates_equal", "kll_states_byte_equal", "kll_quantiles_equal")
+        if not out[k]
+    ]
+    if unequal:
+        sys.exit(f"sketchfold: Arrow prototype diverges from the library: {unequal}")
     return out
 
 

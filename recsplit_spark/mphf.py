@@ -366,10 +366,13 @@ class MPHFDescriptor:
 
         ``coalesce``: partition-count discipline for the Arrow stage. The
         walk itself is no longer the limiter (225 ns/key single-core);
-        the residual end-to-end cost is PER-TASK Arrow transport overhead,
-        so many small partitions lose to few large ones (round-3
-        controls: 16M keys at 48 partitions beat 128 by 1.6x on 32
-        cores). ``'auto'`` coalesces to ~1.5 tasks per core
+        the residual end-to-end cost is a PER-TASK start-up cost, so many
+        small partitions lose to few large ones (round-3 controls: 16M
+        keys at 48 partitions beat 128 by 1.6x on 32 cores). Most of it
+        was each task's ``importlib.invalidate_caches()`` re-parsing the
+        pyspark.zip and spark-core jar directories (0.1-0.35 s a task),
+        now stat-gated by ``import recsplit_spark``; the tuning below
+        predates that gate. ``'auto'`` coalesces to ~1.5 tasks per core
         (``max(2, 3 * defaultParallelism // 2)``), an int coalesces to
         that count, ``None`` (default) leaves partitioning alone.
         ``coalesce`` is a NARROW dependency — no shuffle is introduced —
@@ -672,7 +675,9 @@ class RecSplitBuilder:
         # 2x parallelism: straggler smoothing (bucket-size variance makes
         # per-partition kernel time uneven) without per-task overhead
         # dominating — measured best at 32 cores vs 1x (stragglers) and 4x
-        # (task/Arrow fixed costs). Floored at ~32k keys per kernel task:
+        # (task fixed costs, mostly the per-task zip re-reads that
+        # ``import recsplit_spark`` now gates; tuned before the gate).
+        # Floored at ~32k keys per kernel task:
         # below that the per-task fixed cost IS the build (457k keys at 64
         # partitions measured 1.9 s vs 1.1 s at 8 — stragglers are moot
         # when every kernel runs tens of ms); at large n the floor never

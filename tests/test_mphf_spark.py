@@ -388,3 +388,32 @@ def test_space_priority_max_builder_end_to_end(spark):
     )
     with pytest.raises(ValueError, match="space_priority"):
         RecSplitBuilder(space_priority="fastest")
+
+
+def test_worker_gates_zip_invalidation(spark):
+    """A Python worker that imports the package runs with the stat-gated
+    ``zipimporter.invalidate_caches`` (see ``recsplit_spark.__init__``),
+    so each task start skips re-parsing the unchanged pyspark.zip."""
+    import sys
+
+    import pyarrow as pa
+
+    def _report(batches):
+        import zipimport
+
+        import recsplit_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        gated = hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+        yield pa.RecordBatch.from_pydict(
+            {"gated": [gated], "minor": [sys.version_info[1]]}
+        )
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInArrow(_report, "gated boolean, minor long")
+        .collect()[0]
+    )
+    assert row["gated"] == (sys.version_info < (3, 13))
+    assert row["minor"] == sys.version_info[1]
